@@ -1466,10 +1466,11 @@ object MatchRecognize {
   }
 
   /** Replace every `<relation> MATCH_RECOGNIZE ( … )` span in `sql`
-    * with a registered temp view of the computed result. `relate`
-    * resolves the relation text (through the caller's namespace rules);
-    * `register` installs the result DataFrame and returns its name.
-    * Left = a user-facing parse/validation error. */
+    * with a name standing for the computed result, leftmost (innermost)
+    * first. `relate` resolves the relation text (through the caller's
+    * namespace rules; it may name results spliced earlier); `register`
+    * takes the result DataFrame and returns the name the caller binds
+    * it to. Left = a user-facing parse/validation error. */
   def spliceAll(sql: String, relate: String => DataFrame,
       register: DataFrame => String): Either[String, String] = {
     try {

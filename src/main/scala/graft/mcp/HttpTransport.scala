@@ -33,6 +33,11 @@ object HttpTransport {
   private[mcp] def isValidHostHeader(h: String): Boolean =
     h != null && h.nonEmpty && h.length <= 255 &&
       h.matches("""(\[[0-9A-Fa-f:]+\]|[A-Za-z0-9._-]+)(:\d{1,5})?""")
+
+  /** Largest request body any endpoint reads (4 MiB): far above the
+    * largest served statement, small enough that unauthenticated
+    * endpoints cannot make the server buffer unbounded input. */
+  private[mcp] val MaxBodyBytes = 4 << 20
 }
 
 class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
@@ -80,6 +85,19 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
     os.close()
   }
 
+  /** The request body as UTF-8, or None after answering 413 when it is
+    * longer than [[HttpTransport.MaxBodyBytes]] (at most one byte past
+    * the cap is read). */
+  private def readBody(ex: HttpExchange): Option[String] = {
+    val bytes = ex.getRequestBody.readNBytes(HttpTransport.MaxBodyBytes + 1)
+    if (bytes.length <= HttpTransport.MaxBodyBytes) Some(new String(bytes, StandardCharsets.UTF_8))
+    else {
+      respond(ex, 413, Json.write(ListMap(
+        "error" -> s"request body exceeds ${HttpTransport.MaxBodyBytes} bytes")))
+      None
+    }
+  }
+
   http.createContext("/mcp", (ex: HttpExchange) => {
     cors(ex)
     ex.getRequestMethod match {
@@ -95,8 +113,7 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
           case Some(reason) =>
             deniedHeaders(ex)
             respond(ex, 401, Json.write(ListMap("error" -> reason)))
-          case None =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+          case None => readBody(ex).foreach { body =>
             val sid = Option(ex.getRequestHeaders.getFirst("Mcp-Session-Id"))
             val isInit = body.contains("\"initialize\"")
             if (sid.exists(s => !sessions.containsKey(s)))
@@ -113,6 +130,7 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
                 respond(ex, 200, resp)
               case None => ex.sendResponseHeaders(202, -1) // notification
             }
+          }
         }
       case "DELETE" =>
         // spec: DELETE with the session header terminates the session
@@ -180,8 +198,7 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
             case kv if kv.startsWith("sessionId=") => kv.drop("sessionId=".length)
           }
         sid.map(s => Option(sseStreams.get(s))) match {
-          case Some(Some(stream)) =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+          case Some(Some(stream)) => readBody(ex).foreach { body =>
             server.handle(body).foreach { resp =>
               try {
                 stream.write(sseEvent("message", resp))
@@ -191,6 +208,7 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
               }
             }
             respond(ex, 202, "Accepted", contentType = "text/plain")
+          }
           case _ => respond(ex, 404, """{"error":"unknown or expired session"}""")
         }
       case _ => respond(ex, 405, """{"error":"method not allowed"}""")
@@ -308,12 +326,12 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
       cors(ex)
       ex.getRequestMethod match {
         case "OPTIONS" => ex.sendResponseHeaders(204, -1)
-        case "POST" =>
-          val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+        case "POST" => readBody(ex).foreach { body =>
           oa.register(body) match {
             case Right(json) => respond(ex, 201, json)
             case Left(err) => respond(ex, 400, Json.write(ListMap("error" -> err)))
           }
+        }
         case _ => respond(ex, 405, """{"error":"method not allowed"}""")
       }
       ex.close()
@@ -323,13 +341,12 @@ class HttpTransport(server: StdioServer, port: Int, version: String = "dev",
       cors(ex)
       ex.getRequestMethod match {
         case "OPTIONS" => ex.sendResponseHeaders(204, -1)
-        case "POST" =>
-          val form = OAuthEndpoints.parseParams(
-            new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-          oa.token(form) match {
+        case "POST" => readBody(ex).foreach { body =>
+          oa.token(OAuthEndpoints.parseParams(body)) match {
             case Right(json) => respond(ex, 200, json)
             case Left(err) => respond(ex, 400, Json.write(ListMap("error" -> err)))
           }
+        }
         case _ => respond(ex, 405, """{"error":"method not allowed"}""")
       }
       ex.close()

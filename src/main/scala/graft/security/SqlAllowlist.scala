@@ -22,8 +22,11 @@ import org.apache.spark.sql.execution.command.ExplainCommand
   * scope plus the names defined so far in its own WITH clause, the
   * main query sees them all), so a name bound only inside a nested
   * WITH does not exempt uses at the outer level where it would resolve
-  * to a real table. `information_schema` references are exempt: the
-  * shim views are rebuilt allowlist-filtered on every query.
+  * to a real table. The statement builder (graft.service.Statements)
+  * gates AFTER binding its internal relations into the plan: a
+  * MATCH_RECOGNIZE result (whose source relation was gated on its own)
+  * and an information_schema shim (allowlist-filtered when built) are
+  * plans by then, not names, so only names the client wrote are judged.
   * `EXPLAIN <q>` walks the explained query.
   */
 object SqlAllowlist {
@@ -33,9 +36,7 @@ object SqlAllowlist {
       defaultCatalog: String, defaultSchema: String): Option[String] = {
 
     def checkName(parts: Seq[String], scope: Set[String]): Option[String] = {
-      val lower = parts.map(_.toLowerCase)
-      if (parts.length == 1 && scope(lower.head)) None
-      else if (lower.contains("information_schema")) None
+      if (parts.length == 1 && scope(parts.head.toLowerCase)) None
       else {
         val (c, s, t) = parts match {
           case Seq(t1) => (defaultCatalog, defaultSchema, t1)

@@ -1,6 +1,6 @@
 package graft.service
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.engine.Engine
@@ -10,76 +10,39 @@ import graft.engine.Engine
   * the unrestricted query pass-through (reference
   * internal/trino/client.go:284-290 — the remote Trino serves these
   * natively). Spark's session catalog has no such schema, so the
-  * execute path rewrites those references (outside string literals) to
-  * two session temp views rebuilt from `spark.catalog` listings at
-  * query time, allowlist-filtered exactly like the metadata tools.
+  * statement builder ([[Statements]]) binds each parsed reference to a
+  * relation built here from `spark.catalog` listings at query time,
+  * allowlist-filtered exactly like the metadata tools. Nothing is
+  * registered in the session catalog.
   *
   * The listings are driver-side metadata (bounded by table count, never
-  * by data volume), so refresh-per-query is safe at any corpus scale.
-  * Supported spellings: `information_schema.tables`, an optional
-  * catalog qualifier (`memory.information_schema.columns`), any case.
-  * Double-quoted spellings (`"information_schema"."tables"`) are not
-  * rewritten — the sanitizer-visible unquoted form is what the
-  * reference's own clients emit.
+  * by data volume), so building them per query is safe at any corpus
+  * scale. Supported spellings: `information_schema.tables`, an optional
+  * catalog qualifier (`memory.information_schema.columns`), any case,
+  * quoted or not — the names are matched on the parsed plan, so
+  * string literals and comments never match.
   */
 object InfoSchema {
 
-  val TablesView = "graft_info_schema_tables"
-  val ColumnsView = "graft_info_schema_columns"
-  val SchemataView = "graft_info_schema_schemata"
-  val ViewsView = "graft_info_schema_views"
-
-  private val Ref =
-    """(?i)(?:[A-Za-z_][A-Za-z0-9_]*\s*\.\s*)?information_schema\s*\.\s*(tables|columns|schemata|views)""".r
-
-  /** True when the query references information_schema outside quotes. */
-  def references(sql: String): Boolean = findSpans(sql).nonEmpty
-
-  /** Replace information_schema references (outside string literals and
-    * quoted identifiers) with the shim view names. */
-  def rewrite(sql: String): String = {
-    val spans = findSpans(sql)
-    if (spans.isEmpty) sql
-    else {
-      val sb = new StringBuilder
-      var pos = 0
-      spans.foreach { case (start, end, target) =>
-        sb.append(sql.substring(pos, start)).append(target)
-        pos = end
-      }
-      sb.append(sql.substring(pos)).toString
+  /** The shim a parsed relation name stands for —
+    * `[catalog.]information_schema.tables|columns|schemata|views` — or
+    * None for any other name. */
+  def relation(engine: Engine, parts: Seq[String]): Option[DataFrame] = {
+    val table = parts.map(_.toLowerCase) match {
+      case Seq("information_schema", t) => t
+      case Seq(_, "information_schema", t) => t
+      case _ => ""
     }
-  }
-
-  /** (start, end, replacement) for each match outside '…' / "…" runs. */
-  private def findSpans(sql: String): Seq[(Int, Int, String)] =
-    Ref.findAllMatchIn(sql).collect {
-      case m if !inQuotes(sql, m.start) =>
-        val target = m.group(1).toLowerCase match {
-          case "tables" => TablesView
-          case "columns" => ColumnsView
-          case "schemata" => SchemataView
-          case _ => ViewsView
-        }
-        (m.start, m.end, target)
-    }.toSeq
-
-  /** Whether position `at` falls inside a single-quoted string or
-    * double-quoted identifier ('' and "" escapes respected). */
-  private def inQuotes(sql: String, at: Int): Boolean = {
-    var i = 0
-    var quote: Char = 0
-    while (i < at) {
-      val c = sql.charAt(i)
-      if (quote == 0) { if (c == '\'' || c == '"') quote = c }
-      else if (c == quote) {
-        // doubled quote = escape inside the run; consume both
-        if (i + 1 < sql.length && sql.charAt(i + 1) == quote) i += 1
-        else quote = 0
-      }
-      i += 1
+    table match {
+      case "tables" => Some(tables(engine))
+      case "columns" => Some(columns(engine))
+      case "schemata" => Some(schemata(engine))
+      // no SQL views exist in the embedded catalog (testdata relations
+      // surface as BASE TABLEs) — an EMPTY relation with Trino's column
+      // shape, not an unsupported-reference error
+      case "views" => Some(local(engine, Seq.empty, viewsSchema))
+      case _ => None
     }
-    quote != 0
   }
 
   private val tablesSchema = StructType(Seq(
@@ -98,33 +61,32 @@ object InfoSchema {
     StructField("is_nullable", StringType, nullable = false),
     StructField("data_type", StringType, nullable = false)))
 
-  /** Rebuild both views from the current catalog state (allowlist-
-    * filtered via MetadataService — the same trust boundary as
-    * list_tables / get_table_schema). */
-  def refresh(engine: Engine): Unit = {
-    val spark = engine.spark
-    val meta = new MetadataService(engine)
+  /** Every allowed catalog contributes its namespaces — the default
+    * catalog through the engine's configured (catalog, schema) pair
+    * (temp-view namespace), other catalogs (tpch.tiny) through their
+    * own listings. table_catalog distinguishes rows, so a consumer
+    * filters with WHERE table_catalog = '…' exactly as in Trino.
+    * (Divergence kept: Trino scopes information_schema PER catalog;
+    * this shim serves one merged relation — DIALECT.md.) Filtered via
+    * MetadataService — the same trust boundary as list_tables /
+    * get_table_schema. */
+  private def tablesByNamespace(meta: MetadataService, engine: Engine)
+      : Seq[(String, String, Seq[String])] = {
     val cat = engine.config.catalog
-    val sch = engine.config.schema
-    // every allowed catalog contributes its namespaces — the default
-    // catalog through the engine's configured (catalog, schema) pair
-    // (temp-view namespace), other catalogs (tpch.tiny) through their
-    // own listings. table_catalog distinguishes rows, so a consumer
-    // filters with WHERE table_catalog = '…' exactly as in Trino.
-    // (Divergence kept: Trino scopes information_schema PER catalog;
-    // this shim serves one merged relation — DIALECT.md.)
-    val namespaces: Seq[(String, String)] =
-      (cat, sch) +: meta.listCatalogs().filterNot(_.equalsIgnoreCase(cat))
-        .flatMap(c => meta.listSchemas(c).map(s => (c, s)))
-    val byNs = namespaces.map { case (c, s) => (c, s, meta.listTables(c, s)) }
+    ((cat, engine.config.schema) +: meta.listCatalogs().filterNot(_.equalsIgnoreCase(cat))
+      .flatMap(c => meta.listSchemas(c).map(s => (c, s))))
+      .map { case (c, s) => (c, s, meta.listTables(c, s)) }
+  }
 
-    val tRows = byNs.flatMap { case (c, s, tables) =>
-      tables.map(t => Row(c, s, t, "BASE TABLE")) }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(tRows, 1), tablesSchema)
-      .createOrReplaceTempView(TablesView)
+  private def tables(engine: Engine): DataFrame = {
+    val meta = new MetadataService(engine)
+    local(engine, tablesByNamespace(meta, engine).flatMap { case (c, s, tables) =>
+      tables.map(t => Row(c, s, t, "BASE TABLE")) }, tablesSchema)
+  }
 
-    val cRows = byNs.flatMap { case (c, s, tables) =>
+  private def columns(engine: Engine): DataFrame = {
+    val meta = new MetadataService(engine)
+    local(engine, tablesByNamespace(meta, engine).flatMap { case (c, s, tables) =>
       tables.flatMap { t =>
         meta.getTableSchema(c, s, t).toOption.toSeq.flatten.zipWithIndex.map {
           case (col, i) =>
@@ -132,27 +94,22 @@ object InfoSchema {
               null, "YES", col("Type").toString)
         }
       }
-    }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(cRows, 1), columnsSchema)
-      .createOrReplaceTempView(ColumnsView)
-
-    // schemata: allowlist-filtered schema listing (Trino shape:
-    // catalog_name, schema_name) across the same catalogs
-    val sRows = meta.listSchemas(cat).map(s => Row(cat, s)) ++
-      meta.listCatalogs().filterNot(_.equalsIgnoreCase(cat))
-        .flatMap(c => meta.listSchemas(c).map(s => Row(c, s)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(sRows, 1), schemataSchema)
-      .createOrReplaceTempView(SchemataView)
-
-    // views: no SQL views exist in the embedded catalog (testdata
-    // relations surface as BASE TABLEs) — an EMPTY relation with
-    // Trino's column shape, not an unsupported-reference error
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq.empty[Row], 1), viewsSchema)
-      .createOrReplaceTempView(ViewsView)
+    }, columnsSchema)
   }
+
+  /** Allowlist-filtered schema listing (Trino shape: catalog_name,
+    * schema_name) across the same catalogs. */
+  private def schemata(engine: Engine): DataFrame = {
+    val meta = new MetadataService(engine)
+    val cat = engine.config.catalog
+    local(engine, meta.listSchemas(cat).map(s => Row(cat, s)) ++
+      meta.listCatalogs().filterNot(_.equalsIgnoreCase(cat))
+        .flatMap(c => meta.listSchemas(c).map(s => Row(c, s))), schemataSchema)
+  }
+
+  private def local(engine: Engine, rows: Seq[Row], schema: StructType): DataFrame =
+    engine.spark.createDataFrame(new java.util.ArrayList[Row](
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
 
   private val schemataSchema = StructType(Seq(
     StructField("catalog_name", StringType, nullable = false),

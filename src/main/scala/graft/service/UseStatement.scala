@@ -2,7 +2,8 @@ package graft.service
 
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias,
+  SupervisingCommand, UnresolvedWith}
 
 import graft.engine.Engine
 
@@ -21,11 +22,11 @@ import graft.engine.Engine
   * Spark's current namespace would leave `USE tpch.tiny; SELECT * FROM
   * customer` reading the default catalog's view (the wrong table,
   * silently). Instead, when the session namespace differs from the
-  * configured default, QueryService parses the SQL and QUALIFIES every
-  * unresolved 1/2-part relation to the session namespace (3-part names
-  * resolve as written) with the same scope-aware CTE walk the SQL
-  * allowlist uses, then executes the rewritten plan — Trino's
-  * resolution order, enforced at parse level.
+  * configured default, the statement builder ([[Statements]]) QUALIFIES
+  * every unresolved 1/2-part relation of the parsed statement to the
+  * session namespace (3-part names resolve as written) with the same
+  * scope-aware CTE walk the SQL allowlist uses, then analyzes the
+  * rewritten plan — Trino's resolution order, enforced at parse level.
   */
 object UseStatement {
 
@@ -61,35 +62,39 @@ object UseStatement {
       Left(s"query execution failed: ${String.valueOf(e.getMessage).take(300)}")
   }
 
-  /** Qualify unresolved 1/2-part relations to (catalog, schema) —
-    * scope-aware: CTE-bound names stay as written where their defining
-    * WITH is in scope (same walk as SqlAllowlist), and the engine's
-    * internal `graft_*` shim views (information_schema rewrite targets)
-    * are never qualified. */
-  def qualify(plan: LogicalPlan, catalog: String, schema: String): LogicalPlan = {
-    def rewName(parts: Seq[String], scope: Set[String]): Seq[String] =
-      parts match {
-        case Seq(t) if scope(t.toLowerCase) => parts
-        case Seq(t) if t.toLowerCase.startsWith("graft_") => parts
-        case Seq(t) => Seq(catalog, schema, t)
-        case Seq(s1, _) if s1.equalsIgnoreCase("information_schema") => parts
-        case Seq(s1, t) => Seq(catalog, s1, t)
-        case _ => parts
-      }
+  /** Bind and qualify the relations a parsed statement reads, in one
+    * scope-aware walk. `internal` returns the plan a relation name
+    * stands for when the statement supplies one (its MATCH_RECOGNIZE
+    * results, the information_schema shims); every other 1/2-part name
+    * is qualified to `namespace` when one is given (3-part names resolve
+    * as written). CTE-bound names stay as written where their defining
+    * WITH is in scope (same walk as SqlAllowlist). The walk reaches CTE
+    * bodies, subquery expressions and the query a supervising command
+    * (EXPLAIN, DESCRIBE QUERY) wraps. */
+  def qualify(plan: LogicalPlan, namespace: Option[(String, String)])(
+      internal: Seq[String] => Option[LogicalPlan]): LogicalPlan = {
+    def rewName(parts: Seq[String]): Seq[String] = (parts, namespace) match {
+      case (Seq(t), Some((c, s))) => Seq(c, s, t)
+      case (Seq(s1, t), Some((c, _))) => Seq(c, s1, t)
+      case _ => parts
+    }
     def rew(p: LogicalPlan, scope: Set[String]): LogicalPlan = p match {
+      case c: SupervisingCommand => c.withTransformedSupervisedPlan(rew(_, scope))
       case w: UnresolvedWith =>
         var s = scope
         val newRels = w.cteRelations.map { rel =>
           s = s + rel._1.toLowerCase
-          rel.copy(_2 = rew(rel._2, s).asInstanceOf[
-            org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias])
+          rel.copy(_2 = rew(rel._2, s).asInstanceOf[SubqueryAlias])
         }
         val scopeAll = s
         w.copy(child = rew(w.child, scopeAll), cteRelations = newRels)
       case r: UnresolvedRelation =>
-        val parts = rewName(r.multipartIdentifier, scope)
-        if (parts == r.multipartIdentifier) r
-        else UnresolvedRelation(parts, r.options, r.isStreaming)
+        val parts = r.multipartIdentifier
+        if (parts.length == 1 && scope(parts.head.toLowerCase)) r
+        else internal(parts).getOrElse {
+          val q = rewName(parts)
+          if (q == parts) r else UnresolvedRelation(q, r.options, r.isStreaming)
+        }
       case other =>
         val withChildren = other.mapChildren(rew(_, scope))
         withChildren.transformExpressions {

@@ -44,6 +44,14 @@ class HttpTransportSpec extends SparkSpec {
       .asInstanceOf[collection.Map[String, Any]]("text").toString.contains("\"n\": 5"))
   }
 
+  test("an oversized POST body gets 413 and the server keeps serving") {
+    val big = post("\"" + "x" * (HttpTransport.MaxBodyBytes + 1) + "\"")
+    assert(big.statusCode() == 413, big.body())
+    assert(big.body().contains("request body exceeds"), big.body())
+    val next = post("""{"jsonrpc":"2.0","id":2,"method":"tools/call","params":{"name":"execute_query","arguments":{"query":"SELECT COUNT(*) AS n FROM region"}}}""")
+    assert(next.statusCode() == 200 && next.body().contains("\\\"n\\\": 5"), next.body())
+  }
+
   test("POST /mcp notification returns 202 with no body") {
     val resp = post("""{"jsonrpc":"2.0","method":"notifications/initialized"}""")
     assert(resp.statusCode() == 202 && resp.body().isEmpty)

@@ -3,7 +3,7 @@ package graft.security
 import graft.SparkSpec
 import graft.config.EngineConfig
 import graft.engine.Engine
-import graft.service.QueryService
+import graft.service.{ExplainService, QueryService}
 
 /** GRAFT_ENFORCE_SQL_ALLOWLISTS: the opt-in relation-level allowlist
   * gate on execute_query SQL (beyond-reference hardening; with the flag
@@ -98,6 +98,48 @@ class SqlAllowlistSpec extends SparkSpec {
   test("flag on: EXPLAIN of a denied query is denied too") {
     assert(enforcing.execute("EXPLAIN SELECT COUNT(*) FROM customer").isLeft)
     assert(enforcing.execute("EXPLAIN SELECT COUNT(*) FROM region").isRight)
+  }
+
+  // enforcement on, with `events` in the table allowlist
+  private val eventsEnv = Map(
+    "GRAFT_ENFORCE_SQL_ALLOWLISTS" -> "true",
+    "TRINO_ALLOWED_TABLES" -> "spark_catalog.default.events,spark_catalog.default.region")
+  private lazy val eventsEngine =
+    new Engine(EngineConfig.fromEnv(eventsEnv).toOption.get, Some(dir), existing = Some(spark))
+
+  private def clicks(relation: String): String =
+    s"""SELECT user_id, n_clicks FROM $relation MATCH_RECOGNIZE (
+       |  PARTITION BY user_id ORDER BY ts, event_id
+       |  MEASURES COUNT(B.*) AS n_clicks
+       |  PATTERN (A B+)
+       |  DEFINE A AS event_type = 'view', B AS event_type = 'click')""".stripMargin
+
+  test("flag on: a MATCH_RECOGNIZE over an allowed table is served on every path") {
+    val q = new QueryService(eventsEngine)
+    val mr = clicks("events")
+    val rows = q.execute(mr)
+    assert(rows.isRight && rows.toOption.get.rows.nonEmpty, rows)
+    assert(q.execute(s"EXPLAIN $mr").isRight, q.execute(s"EXPLAIN $mr"))
+    val ex = new ExplainService(eventsEngine).explain(mr, "")
+    assert(ex.isRight, ex)
+    val st = q.execute(s"SHOW STATS FOR ($mr)")
+    assert(st.isRight && st.toOption.get.rows.exists(_.head == "user_id"), st)
+  }
+
+  test("flag on: the same MATCH_RECOGNIZE over a table not in the list is denied") {
+    // the source relation reads events (allowed) and customer (not)
+    val mr = clicks("(SELECT e.* FROM events e JOIN customer c ON e.user_id = c.c_custkey)")
+    val denied = Left("table access denied: spark_catalog.default.customer not in allowlist")
+    val q = new QueryService(eventsEngine)
+    assert(q.execute(mr) == denied)
+    assert(q.execute(s"EXPLAIN $mr") == denied)
+    assert(new ExplainService(eventsEngine).explain(mr, "") == denied)
+    assert(q.execute(s"SHOW STATS FOR ($mr)") == denied)
+  }
+
+  test("flag on: explain_query of a denied table is denied") {
+    assert(new ExplainService(eventsEngine).explain("SELECT COUNT(*) FROM customer", "IO") ==
+      Left("table access denied: spark_catalog.default.customer not in allowlist"))
   }
 
   test("catalog and schema allowlists deny at their levels") {

@@ -217,8 +217,29 @@ class ServicesSpec extends SparkSpec {
   }
 
   test("listTables: engine-internal relation caches are not exposed") {
-    val tables = new MetadataService(engine()).listTables("", "")
-    assert(!tables.exists(_.startsWith("graft_src_")), tables.mkString(","))
+    val e = engine()
+    val meta = new MetadataService(e)
+    def catalogNames = spark.catalog.listTables().collect().map(_.name).toSet
+    def noInternal(): Unit = {
+      val tables = meta.listTables("", "")
+      assert(!tables.exists(_.startsWith("graft_")), tables.mkString(","))
+    }
+    noInternal()
+    val before = catalogNames
+    val qs = new QueryService(e)
+    val es = new ExplainService(e)
+    val steps = Seq(
+      () => qs.execute(clicksMr),
+      () => qs.execute("SELECT COUNT(*) AS n FROM information_schema.tables"),
+      () => qs.execute(s"EXPLAIN $clicksMr"),
+      () => es.explain(clicksMr, ""),
+      () => qs.execute(s"SHOW STATS FOR ($clicksMr)"))
+    steps.foreach { step =>
+      val r = step()
+      assert(r.isRight, r)
+      noInternal()
+    }
+    assert(catalogNames == before)
   }
 
   test("listTables: table allowlist filters") {
@@ -300,6 +321,48 @@ class ServicesSpec extends SparkSpec {
 
   test("explain: target query still passes the guard") {
     assert(new ExplainService(engine()).explain("DROP TABLE region", "LOGICAL").isLeft)
+  }
+
+  test("explain: information_schema is explained on a fresh engine") {
+    val r = new ExplainService(engine()).explain("SELECT * FROM information_schema.tables", "")
+    assert(r.isRight, r)
+    assert(r.toOption.get.head("Query Plan").toString.contains("Physical Plan"))
+  }
+
+  // --- MATCH_RECOGNIZE results bound into the plan ---
+
+  private val clicksMr =
+    """SELECT user_id, start_ts, n_clicks FROM events MATCH_RECOGNIZE (
+      |  PARTITION BY user_id ORDER BY ts, event_id
+      |  MEASURES FIRST(A.ts) AS start_ts, COUNT(B.*) AS n_clicks
+      |  PATTERN (A B+)
+      |  DEFINE A AS event_type = 'view', B AS event_type = 'click')""".stripMargin
+
+  private def rowsOf(qs: QueryService, sql: String): Seq[Seq[Any]] = {
+    val r = qs.execute(sql)
+    assert(r.isRight, r)
+    r.toOption.get.rows
+  }
+
+  test("execute: a MATCH_RECOGNIZE inside a CTE body resolves") {
+    val qs = new QueryService(engine())
+    val direct = rowsOf(qs, s"SELECT * FROM ($clicksMr) ORDER BY user_id, start_ts")
+    assert(direct.nonEmpty)
+    assert(rowsOf(qs, s"WITH m AS ($clicksMr) SELECT * FROM m ORDER BY user_id, start_ts") ==
+      direct)
+  }
+
+  test("execute: a MATCH_RECOGNIZE over another one's result resolves") {
+    val qs = new QueryService(engine())
+    val nested = rowsOf(qs,
+      s"""SELECT user_id, n_matches FROM ($clicksMr) MATCH_RECOGNIZE (
+         |  PARTITION BY user_id ORDER BY start_ts
+         |  MEASURES COUNT(X.*) AS n_matches
+         |  PATTERN (X+)
+         |  DEFINE X AS n_clicks >= 1) ORDER BY user_id""".stripMargin)
+    val expected = rowsOf(qs,
+      s"SELECT user_id, COUNT(*) AS n_matches FROM ($clicksMr) GROUP BY user_id ORDER BY user_id")
+    assert(expected.nonEmpty && nested == expected)
   }
 
   // --- Json round-trip ---

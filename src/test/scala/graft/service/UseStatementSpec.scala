@@ -43,6 +43,17 @@ class UseStatementSpec extends SparkSpec {
       .columns.contains("c_custkey"))
   }
 
+  test("after USE, explain_query reads the table execute_query would read") {
+    val engine = new Engine(EngineConfig.fromEnv(Map.empty).toOption.get, Some(dir), Some(spark))
+    val s = new QueryService(engine)
+    assert(s.execute("USE tpch.tiny").isRight)
+    val tool = new ExplainService(engine).explain("SELECT * FROM nation", "IO")
+      .toOption.get.head("Query Plan").toString
+    assert(tool.contains("TpchTiny(table=nation"), tool)
+    val stmt = s.execute("EXPLAIN (TYPE IO) SELECT * FROM nation").toOption.get
+    assert(stmt.rows == Seq(Seq(tool)))
+  }
+
   test("USE schema keeps the current catalog; errors use Trino texts") {
     val s = qs()
     s.execute("USE tpch.tiny")
